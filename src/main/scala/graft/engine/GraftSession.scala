@@ -86,6 +86,9 @@ object GraftSession {
       SparkSession.builder().master(s"local[$n]").appName(appName), n
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // refuse a retired or mistyped spark.graft.* override at startup, not
+    // at the first query that consults the scale policy
+    ScalePolicy.force(spark)
     spark
   }
 }

@@ -431,8 +431,8 @@ object TextAnalysis {
     * rate arithmetic runs per-row in exact BIGINT `div`s identical to the
     * driver's, and the sampled counts fold into the same final aggregate as
     * conditional sums — the tokens kernel runs once, nothing shuffles.
-    * Never taken at scale: the caller's gate is the same optimizedPlan-stats
-    * cap that keeps every other fused branch off real corpora. */
+    * Never taken at scale: the caller's gate is the same ScalePolicy
+    * fusion decision that keeps every other fused branch off real corpora. */
   private def mixtureSampleFused(docs: DataFrame, budgetPermille: Long,
                                  textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

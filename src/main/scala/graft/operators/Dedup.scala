@@ -77,8 +77,8 @@ object Dedup {
       graft.functions.TextHashFunctions.simhash(col(textCol)).as("simhash"))
 
   /** The band-key columns `k0..k{Bands-1}` over a packed minhash signature
-    * column — THE one derivation every consumer (near-dup pairs, X18Probe)
-    * must share, or banding changes silently desync them.
+    * column — THE one derivation every consumer (near-dup pairs, the group-
+    * pair pipeline) must share, or banding changes silently desync them.
     *
     * Band keys are `xxhash64` of the band's 8 minhashes (8-byte join keys)
     * rather than the oracle's concat-string keys: a hash collision across
@@ -121,7 +121,8 @@ object Dedup {
     *    always carry the same est_jaccard. */
   def minhashNearDupPairs(docs: DataFrame, minEstJaccard: Double,
                           textCol: String = "text"): DataFrame = {
-    // r17 (VERDICT r16 directive 1, measured with tools/X18Probe at sf1):
+    // r17 (VERDICT r16 directive 1; BASELINE.md "Round-17: x18's sort-tail
+    // re-execution fixed with a group-pair checkpoint", measured at sf1):
     // the callers' orderBy tail re-executes its CHILD up to three times —
     // range sampler, skew resample, final pass — and the child here is the
     // whole corpus pipeline (signature kernel, sig aggregation, band

@@ -87,18 +87,11 @@ object Relational {
     * OpenHashMap[value, count] on the INTERPRETED row path, and JobProfile
     * (r15) measured the x33/x54/x67/x77 residual 0.25–0.40 s to be exactly
     * that interpreted stage. A COUNT-TABLE feed — groupBy(keys, value)
-    * .count() then percentile(value, array(qs), count) — was hypothesized
-    * to beat it and is implemented below behind
-    * `spark.graft.pctCountTable` (results are bit-identical: the frequency
-    * argument sums into the same OpenHashMap buffer the raw-row form builds
-    * by +1 increments). Measured (PctProbe interleaved A/B, r16): the count
-    * table LOSES at every SF tried — +0.14 s at sf0.1, +0.22 s at sf1,
-    * +0.20 s at sf5 (x33+x67 totals) — because ObjectHashAggregate already
-    * partial-aggregates map-side, so the data crossing the shuffle is the
-    * same bounded (group, value, count) multiset either way and the count
-    * table only adds a full extra hash-agg stage + shuffle. Default is
-    * therefore the direct form at every scale; the flag stays for re-probes
-    * and the equivalence spec.
+    * .count() then percentile(value, array(qs), count) — LOSES in an
+    * interleaved A/B at every SF tried (r16: +0.14 s at sf0.1, +0.22 s at
+    * sf1, +0.20 s at sf5, x33+x67 totals; BASELINE.md): ObjectHashAggregate
+    * already partial-aggregates map-side, so the count table only adds a
+    * full extra hash-agg stage + shuffle.
     *
     * (A pure-declarative window-CDF variant was also measured and REVERTED
     * in r15: two window frames + conditional-min brackets over the 49k-row
@@ -118,23 +111,10 @@ object Relational {
     // SQL text reproduces the caller's percentages bit-for-bit
     val qList = qs.map { case (q, _) => q.toString }.mkString(", ")
     val base = df.select(keys.map(col) :+ valueCol.as("__v"): _*)
-    val useCountTable = df.sparkSession.conf
-      .get("spark.graft.pctCountTable", "false").toBoolean
-    val ps = if (useCountTable) {
-      // Half 1: the codegen count table. Spark's Percentile sums the
-      // frequency argument into the same OpenHashMap[value, count] buffer
-      // that the raw-row form builds by +1 increments, so half 2 is
-      // bit-identical to the direct form on every corpus.
-      base.groupBy((keys :+ "__v").map(col): _*).agg(count(lit(1)).as("__c"))
-        .groupBy(keys.map(col): _*)
-        .agg(expr(s"percentile(__v, array($qList), __c)").as("__ps"))
-    } else {
-      // Direct form (pre-r16; kept A/B-able via spark.graft.pctCountTable):
-      // ONE interpreted ObjectHashAggregate over raw rows, array form so a
-      // single map serves all requested percentiles.
-      base.groupBy(keys.map(col): _*)
-        .agg(expr(s"percentile(__v, array($qList))").as("__ps"))
-    }
+    // ONE interpreted ObjectHashAggregate over raw rows, array form so a
+    // single map serves all requested percentiles
+    val ps = base.groupBy(keys.map(col): _*)
+      .agg(expr(s"percentile(__v, array($qList))").as("__ps"))
     ps.select(keys.map(col) ++ qs.zipWithIndex.map { case ((_, name), i) =>
       element_at(col("__ps"), i + 1).as(name) }: _*)
   }
@@ -223,13 +203,10 @@ object Relational {
     // be four extra jobs to recompute what row_number/count read straight
     // off that partition. Zero-job route check (physical partition count);
     // at scale no caller hands this operator a single partition.
-    // The route also honors the fusion disable knob (ADVICE r14): a tiny
-    // single-file scan is 1 partition even with the catalog gate off, and
-    // without this check the equivalence specs' "plain arm" would compare
-    // window-route against window-route instead of pinning the two-pass.
-    val oneTaskEnabled = spark.conf.getOption("spark.graft.oneTaskFloorBytes")
-      .map(_.toLong).forall(_ > 0)
-    if (oneTaskEnabled && df.rdd.getNumPartitions == 1) {
+    // The decision belongs to ScalePolicy, so `scale.force=atScale` pins the
+    // two-pass on a tiny single-file scan (1 partition with no fusion at
+    // all) and the equivalence specs compare window route vs two-pass.
+    if (graft.engine.ScalePolicy.windowRoute(df)) {
       lastKeyedRoute = "window"
       val byKey = Window.partitionBy(keys.map(col): _*)
       return df

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Portable, TextAnalysis, VectorFunctions => V}
 import graft.functions.Portable.{Spark => SparkD, Duck => DuckD}
+import graft.engine.ScalePolicy
 import graft.operators.{Dedup, Multimodal, Relational, Similarity}
 import graft.sources.Tables
 
@@ -79,7 +80,7 @@ object Catalog {
   private def reportSortFused(df: DataFrame, cols: Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(cols: _*)
 
-  /** [[reportSort]] that follows a query's [[oneTaskPlan]] decision: in the
+  /** [[reportSort]] that follows a query's [[ScalePolicy.oneTask]] decision: in the
     * fused branch everything is already one partition, so the coalesce(1)
     * variant is a no-op narrow sort (repartition(1) would re-introduce the
     * one exchange the fusion removed); at scale it is plain [[reportSort]]. */
@@ -108,7 +109,7 @@ object Catalog {
     * (zero-job parquet byte estimate). */
   private def sortedDocs(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "documents").select("doc_id", "text")
-    if (docsUnderSpread(s, d)) base.orderBy("doc_id")
+    if (ScalePolicy.kernelUnderSpread(s, d)) base.orderBy("doc_id")
     else base
       .repartitionByRange(s.sparkContext.defaultParallelism, col("doc_id"))
       .sortWithinPartitions("doc_id")
@@ -142,37 +143,17 @@ object Catalog {
     * past the gate, and the branch is moot — but hash-clustering by doc_id
     * is still what the downstream aggregates want.
     *
-    * The spread is GATED on the scan's size estimate (optimizedPlan.stats
-    * — the parquet file bytes; no job): under the gate the kernel work on
-    * 1-2 input splits costs less than the exchange + its AQE stage jobs
-    * (x85 at sf0.1: an unconditional spread measured +0.33 s of pure
-    * floor), above it the serialized scan dominates (x85 at sf1:
+    * The spread follows [[ScalePolicy.kernelUnderSpread]]: under the gate
+    * the kernel work on 1-2 input splits costs less than the exchange + its
+    * AQE stage jobs (x85 at sf0.1: an unconditional spread measured +0.33 s
+    * of pure floor), above it the serialized scan dominates (x85 at sf1:
     * 1.76 → 1.12 s WITH the spread). An ungated variant existed through
     * r14 (x89/x90/x91/x95) — r15 A/B'd each onto the gate: x89 0.59→0.22,
     * x95 0.60→0.50, x97 0.64→0.52 (inline form), x91 wash on wall but
     * 196 → 5 tasks. */
-  private val SpreadBytes = 2L << 20
-  private val SpreadRows = 20L * 1000
-  /** Gate byte floor, conf-overridable (`spark.graft.kernelSpreadBytes`) so
-    * PlanShapeSpec can pin the at-scale spread branch on tiny test data —
-    * the same role `spark.graft.oneTaskFloorBytes` plays for [[oneTaskPlan]]. */
-  private def spreadFloorBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.kernelSpreadBytes")
-      .map(_.toLong).getOrElse(SpreadBytes)
-  /** Row companion to the byte floor (`spark.graft.kernelSpreadRows`,
-    * default 20k): compressed bytes drift with codec/corpus — the r16
-    * one-task lesson, where events-sf1 compressed under a cap calibrated
-    * as unreachable — so the spread also triggers on the parquet-footer
-    * doc count (zero-job, [[graft.sources.Tables.rowCount]]). 20k sits
-    * 4× above sf0.1's 5k docs and 2.5× under sf1's 50k: either statistic
-    * alone keeps today's branches; a recompressed corpus cannot silently
-    * serialize a 50k-doc kernel pass. */
-  private def spreadFloorRows(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.kernelSpreadRows")
-      .map(_.toLong).getOrElse(SpreadRows)
   private def kernelDocsAuto(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "documents").select("doc_id", "text")
-    if (!docsUnderSpread(s, d))
+    if (!ScalePolicy.kernelUnderSpread(s, d))
       base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
     // r15: the under-spread scan is ONE split anyway, but a bare FileScan
     // reports UnknownPartitioning, so downstream windows/aggs still plan
@@ -181,15 +162,6 @@ object Catalog {
     // (x89: 5 jobs → 1, measured)
     else base.coalesce(1)
   }
-
-  /** True iff [[kernelDocsAuto]] takes its FUSED (coalesce(1)) branch —
-    * kernel queries that add window-total tails must gate them on the SAME
-    * statistic, or a 2–16 MB corpus would spread for the kernel and then
-    * funnel back through a global window. */
-  private def docsUnderSpread(s: SparkSession, d: String): Boolean =
-    t(s, d, "documents").select("doc_id", "text")
-      .queryExecution.optimizedPlan.stats.sizeInBytes < spreadFloorBytes(s) &&
-      graft.sources.Tables.rowCount(s, d, "documents") < spreadFloorRows(s)
 
   /** (doc_id, text) input for x20's shingle-set corpus pass, hash-spread
     * above the kernel-spread gate (r17 session 2). The corpus parquet is
@@ -212,7 +184,7 @@ object Catalog {
     * exchange from the query's own plan (the minhashGroupPairs pattern). */
   private[graft] def dedupDocs(s: SparkSession, d: String): DataFrame = {
     val base = t(s, d, "documents").select("doc_id", "text")
-    if (docsUnderSpread(s, d)) base
+    if (ScalePolicy.kernelUnderSpread(s, d)) base
     else base.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
   }
 
@@ -222,72 +194,42 @@ object Catalog {
     * keeps the fully-distributed shuffle-join plan. */
   private val MaxBroadcastLmEntries: Int = 1 << 20
 
-  /** ONE-TASK floor fusion for cheap-expression relational queries (r14).
+  /** ONE-TASK floor fusion for cheap-expression relational queries (r14),
+    * decided by [[ScalePolicy.oneTask]] over the summed input shapes.
     *
-    * When a query's entire input is tiny — summed parquet bytes from the
-    * scan relations' `optimizedPlan.stats`, the same zero-job statistic
-    * broadcast thresholds and [[kernelDocsAuto]] gate on — `coalesce(1)`
-    * the scans. A 1-partition child reports `SinglePartition`, which
-    * satisfies every required distribution, so EnsureRequirements inserts
-    * ZERO exchanges and the whole query (scan, join, agg, window, total
-    * sort, sink) fuses into ONE single-task stage: no AQE per-exchange
-    * stage jobs, no range-sampling pass, no 32-task reduce stages. The
-    * floor-class rows in BENCH pay 2-3 jobs × ~0.1 s of pure scheduling
-    * against DuckDB totals of ~0.01 s (BASELINE.md's row-group finding:
-    * every sf0.1 scan is one task regardless); below the cap one task IS
-    * the right plan on any engine — DuckDB runs these same queries on
-    * effectively one morsel. Above the cap the plan is byte-identical to
-    * the ungated one, so the 100 TB posture is untouched: the gate can
-    * never fire on a real corpus (sf1's events already exceeds it).
+    * When a query's entire input is tiny, `coalesce(1)` the scans. A
+    * 1-partition child reports `SinglePartition`, which satisfies every
+    * required distribution, so EnsureRequirements inserts ZERO exchanges
+    * and the whole query (scan, join, agg, window, total sort, sink) fuses
+    * into ONE single-task stage: no AQE per-exchange stage jobs, no
+    * range-sampling pass, no 32-task reduce stages. The floor-class rows in
+    * BENCH pay 2-3 jobs × ~0.1 s of pure scheduling against DuckDB totals
+    * of ~0.01 s (BASELINE.md's row-group finding: every sf0.1 scan is one
+    * task regardless); below the cap one task IS the right plan on any
+    * engine — DuckDB runs these same queries on effectively one morsel.
+    * Above the cap the plan is byte-identical to the ungated one, so the
+    * 100 TB posture is untouched.
     *
     * EXCLUDED by design: kernel/codec/dedup tiers, whose per-row CPU a
     * byte gate cannot see (the codec-tier lesson at [[codecDocIds]]) —
-    * those keep their explicit spreads. Gate tunable/disable-able via
-    * `spark.graft.oneTaskFloorBytes` (0 disables; used by PlanShapeSpec
-    * to pin the at-scale plan shapes).
+    * those keep their explicit spreads.
     *
-    * r16 addition — a ROW cap alongside the byte cap
-    * (`spark.graft.oneTaskFloorRows`, default 750k, 0 disables fusion):
-    * `stats.sizeInBytes` is COMPRESSED file bytes, and the 2026-08-13
-    * corpus regeneration compressed events-sf1 (1M rows) to 11.9 MB —
-    * under the byte cap that was calibrated as "sf1's events already
-    * exceeds it" — so every events-only fused query silently planned a
-    * 1M-row SINGLE-TASK job at sf1 (caught by pair O's per-query rows:
-    * x62 2.50 s/1 task, x74 2.13, x28 1.44). The row count comes from
-    * the parquet footers ([[Tables.rowCount]] — zero-job, cached,
-    * compression-invariant); 750k keeps every bench-SF fusion (sf0.1
-    * max is lineitem's 600k) and can never hold at sf1+ (events 1M,
-    * growing linearly). Both caps must pass: a wide-row corpus under
-    * the row cap still fuses only if its bytes are one-task-sized. */
-  private val OneTaskFloorBytes = 16L << 20
-  private val OneTaskFloorRows = 750L * 1000
-  private def oneTaskPlan(s: SparkSession, d: String, tables: String*): Boolean = {
-    val cap = s.conf.getOption("spark.graft.oneTaskFloorBytes")
-      .map(_.toLong).getOrElse(OneTaskFloorBytes)
-    val rowCap = s.conf.getOption("spark.graft.oneTaskFloorRows")
-      .map(_.toLong).getOrElse(OneTaskFloorRows)
-    cap > 0 && rowCap > 0 &&
-      tables.map(n =>
-        t(s, d, n).queryExecution.optimizedPlan.stats.sizeInBytes).sum <= BigInt(cap) &&
-      tables.map(n => graft.sources.Tables.rowCount(s, d, n)).sum <= rowCap
-  }
-
-  /** [[oneTaskPlan]]-gated single-table loader: the common case where the
-    * query reads one table (multi-table queries gate on the sum explicitly
-    * so a fused side never meets an unfused one across a join). */
+    * This loader covers the single-table case; multi-table queries decide
+    * once on the sum of their inputs so a fused side never meets an unfused
+    * one across a join. */
   private def tF(s: SparkSession, d: String, n: String): DataFrame = {
     val df = t(s, d, n)
-    if (oneTaskPlan(s, d, n)) df.coalesce(1) else df
+    if (ScalePolicy.oneTask(s, d, n)) df.coalesce(1) else df
   }
 
   /** events spread for the per-user window tails (q11/x36/x45/x46/x58/x73):
     * at scale, ONE range exchange on user_id satisfies the window's
-    * clustering and pre-orders the output; below the [[oneTaskPlan]] cap the
+    * clustering and pre-orders the output; below the one-task cap the
     * single partition satisfies the same distributions with ZERO exchanges
     * (and no range-sampling job). */
   private def eventsByUser(s: SparkSession, d: String): DataFrame = {
     val ev = t(s, d, "events")
-    if (oneTaskPlan(s, d, "events")) ev.coalesce(1)
+    if (ScalePolicy.oneTask(s, d, "events")) ev.coalesce(1)
     else ev.repartitionByRange(col("user_id"))
   }
 
@@ -412,7 +354,7 @@ object Catalog {
       // the hash join's clustering on both sides, so the whole query is one
       // job (a broadcast build would be a second job for nothing on a
       // 1-task stream side). At scale: broadcast dim, as before.
-      val fused = oneTaskPlan(s, d, "orders", "customer")
+      val fused = ScalePolicy.oneTask(s, d, "orders", "customer")
       val fact = if (fused) t(s, d, "orders").coalesce(1) else t(s, d, "orders")
       val dim = if (fused) t(s, d, "customer").coalesce(1).hint("shuffle_hash")
                 else broadcast(t(s, d, "customer"))
@@ -430,7 +372,7 @@ object Catalog {
   /** Q10 — E2 anti join (customers with no orders). */
   val q10 = Q("q10_anti_join",
     (s, d) => {
-      val fused = oneTaskPlan(s, d, "customer", "orders")
+      val fused = ScalePolicy.oneTask(s, d, "customer", "orders")
       val (cust, ords) =
         if (fused) (t(s, d, "customer").coalesce(1),
           t(s, d, "orders").coalesce(1).hint("shuffle_hash"))
@@ -512,7 +454,7 @@ object Catalog {
   /** Q16 — E1+E3 join + ranking window: top-2 customers per nation. */
   val q16 = Q("q16_join_window",
     (s, d) => {
-      val fused = oneTaskPlan(s, d, "customer", "nation")
+      val fused = ScalePolicy.oneTask(s, d, "customer", "nation")
       val cust = if (fused) t(s, d, "customer").coalesce(1) else t(s, d, "customer")
       val nat = if (fused) t(s, d, "nation").coalesce(1).hint("shuffle_hash")
                 else broadcast(t(s, d, "nation"))
@@ -593,9 +535,9 @@ object Catalog {
     // pair set is NOT report-sized — it grows quadratically in near-dup
     // CLASS sizes (14k rows at sf0.01 → 1.4M at sf0.1 → 65.2M at sf5 on
     // this dup-heavy corpus), so repartition(1) funneled it through ONE
-    // sort task: 50-68 s
-    // of a 55-62 s query against 3-8 s of actual compute (X18Probe, 3
-    // rounds). orderBy's range sampler does re-execute the join child (the
+    // sort task: 50-68 s of a 55-62 s query against 3-8 s of actual
+    // compute (BASELINE.md "Round-10 continuation: x18's 62 s at sf5").
+    // orderBy's range sampler does re-execute the join child (the
     // original reason reportSort was chosen) but that child is the CHEAP
     // part; measured tails at sf5: repartition(1) 49-69 s, orderBy 14-21 s,
     // localCheckpoint+orderBy 51-57 s (materializing 65M rows costs more
@@ -685,7 +627,7 @@ object Catalog {
     // lshTopK's single-partition ranking tail already emits (qid, rn) total
     // order — no report sort on top; fused below the one-task cap (r15)
     (s, d) => Similarity.lshTopK(t(s, d, "embeddings"), 5L, 3, probe = 1,
-      fuseOneTask = oneTaskPlan(s, d, "embeddings")),
+      fuseOneTask = ScalePolicy.oneTask(s, d, "embeddings")),
     Some {
       val anyBandProbe = (0 until Similarity.Bands)
         .map(b => s"bit_count(xor(q.k$b, c.k$b)) <= 1").mkString(" OR ")
@@ -728,14 +670,7 @@ object Catalog {
     // less than the join re-runs it stops.
     (s, d) => {
       val pairs = Dedup.embeddingNearDupLsh(t(s, d, "embeddings"), 0.3)
-      // conf override (`spark.graft.pairSortBytes`) so the oracle gate and
-      // PlanShapeSpec can exercise the at-scale branch on tiny test data —
-      // the same role every other gate's knob plays
-      val cap = s.conf.getOption("spark.graft.pairSortBytes")
-        .map(_.toLong).getOrElse(16L << 20)
-      val small = t(s, d, "embeddings")
-        .queryExecution.optimizedPlan.stats.sizeInBytes < cap
-      if (small) reportSort(pairs, col("a"), col("b"))
+      if (ScalePolicy.pairMerge(s, d)) reportSort(pairs, col("a"), col("b"))
       else pairs.localCheckpoint(true).orderBy(col("a"), col("b"))
     },
     Some {
@@ -909,8 +844,7 @@ object Catalog {
     * `quantile_cont` share the linear-interpolation definition). */
   val x33 = Q("x33_percentiles",
     // array-form percentile plan (r15): see Relational.exactPercentiles —
-    // one builtin map for all three qs; the count-table variant measured
-    // worse at sf0.1/1/5 and sits behind spark.graft.pctCountTable (r16)
+    // one builtin map for all three qs
     (s, d) => reportSortFused(
       Relational.exactPercentiles(tF(s, d, "events"), Seq("event_type"),
           col("value"), Seq(0.5 -> "p50r", 0.9 -> "p90r", 0.99 -> "p99r"))
@@ -927,7 +861,7 @@ object Catalog {
     * have no customer row (and vice versa). */
   val x35 = Q("x35_full_outer",
     (s, d) => {
-      val fused = oneTaskPlan(s, d, "orders", "customer")
+      val fused = ScalePolicy.oneTask(s, d, "orders", "customer")
       def side(n: String) = if (fused) t(s, d, n).coalesce(1) else t(s, d, n)
       val oc = side("orders").groupBy(col("o_custkey").as("k"))
         .agg(count(lit(1)).as("n"))
@@ -1113,7 +1047,7 @@ object Catalog {
       .groupBy("d").pivot("event_type", eventTypes).agg(count(lit(1)))
       .select(col("d") +: eventTypes.map(tp =>
         coalesce(col(tp), lit(0L)).as(tp)): _*)
-      .transform(reportSortAuto(oneTaskPlan(s, d, "events"))(_, col("d"))),
+      .transform(reportSortAuto(ScalePolicy.oneTask(s, d, "events"))(_, col("d"))),
     Some {
       val cols = eventTypes.map(tp =>
         s"COUNT(CASE WHEN event_type = '$tp' THEN 1 END) AS $tp").mkString(",\n  ")
@@ -1152,7 +1086,7 @@ object Catalog {
       // the registered 'customer'/'orders' views with coalesce(1) variants
       // would leak the fused layout into any later spark.sql query that
       // skips registerAll
-      val (cv, ov) = if (oneTaskPlan(s, d, "customer", "orders")) {
+      val (cv, ov) = if (ScalePolicy.oneTask(s, d, "customer", "orders")) {
         t(s, d, "customer").coalesce(1).createOrReplaceTempView("customer_x44")
         t(s, d, "orders").coalesce(1).createOrReplaceTempView("orders_x44")
         ("customer_x44", "orders_x44")
@@ -1305,7 +1239,7 @@ object Catalog {
       // 3 AQE exchange-stage hops between 1-TASK stages (the 0.6 MB scan is
       // one partition regardless, so the exchanges bought no parallelism).
       // The kernel-tier exclusion doesn't apply: x49 has no spread to lose.
-      val fused = oneTaskPlan(s, d, "documents")
+      val fused = ScalePolicy.oneTask(s, d, "documents")
       val docs = tF(s, d, "documents")
       val hitCols = TextAnalysis.profiles.zipWithIndex.map { case ((l, _), i) =>
         element_at(col("st"), i + 1).cast("int").as(s"${l}_hits") }
@@ -1707,7 +1641,7 @@ object Catalog {
         round(stddev_samp(col("l_discount")), 4).as("sd_disc"),
         round(var_samp(col("l_tax")), 4).as("var_tax"),
         round(regr_slope(col("l_extendedprice"), col("l_quantity")), 4).as("slope_pq"))
-      .transform(reportSortAuto(oneTaskPlan(s, d, "lineitem"))(_, col("rflag"))),
+      .transform(reportSortAuto(ScalePolicy.oneTask(s, d, "lineitem"))(_, col("rflag"))),
     Some("""SELECT l_returnflag AS rflag,
            |  round(corr(l_quantity, l_extendedprice), 4) AS corr_qp,
            |  round(covar_samp(l_quantity, l_extendedprice), 4) AS covar_qp,
@@ -1740,7 +1674,7 @@ object Catalog {
       // The bounded O(users) report takes the usual reportSort tail.
       val eRaw = t(s, d, "events").select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-      if (oneTaskPlan(s, d, "events")) {
+      if (ScalePolicy.oneTask(s, d, "events")) {
         // ONE-TASK branch (r14): per-user event array + three conditional
         // array scans — one agg, zero joins, zero exchanges. The identical
         // funnel semantics: t1 = min signup time, t2 = min click time
@@ -1827,7 +1761,8 @@ object Catalog {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_kept"), min("event_id").as("min_id"),
         max("event_id").as("max_id"))
-      .transform(reportSortAuto(oneTaskPlan(s, d, "events"))(_, col("event_type"))),
+      .transform(reportSortAuto(ScalePolicy.oneTask(s, d, "events"))(
+        _, col("event_type"))),
     Some("""SELECT event_type, COUNT(*) AS n_kept, min(event_id) AS min_id,
            |  max(event_id) AS max_id
            |FROM (SELECT event_type, event_id,
@@ -1980,7 +1915,7 @@ object Catalog {
     * here because the oracle hash-checks exact values. */
   val x67 = Q("x67_winsorize",
     (s, d) => {
-      val fused = oneTaskPlan(s, d, "events")
+      val fused = ScalePolicy.oneTask(s, d, "events")
       val e = tF(s, d, "events")
       // Clip bounds rounded to 4 decimals — the DECLARED winsorize
       // semantics since round 7: the interpolated percentile of 2-decimal
@@ -2029,7 +1964,7 @@ object Catalog {
     * per-row arithmetic (no quantile pass); count + decimal-exact sum per
     * bucket. */
   val x68 = Q("x68_histogram",
-    (s, d) => reportSortAuto(oneTaskPlan(s, d, "events"))(tF(s, d, "events")
+    (s, d) => reportSortAuto(ScalePolicy.oneTask(s, d, "events"))(tF(s, d, "events")
       .withColumn("bucket", width_bucket(col("value"), lit(0.0), lit(100.0), lit(10)))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"),
@@ -2088,7 +2023,7 @@ object Catalog {
     * spread, and total characters — the slice a curation run reviews before
     * admitting a source. Pure integer outputs; one partial-agg shuffle. */
   val x70 = Q("x70_source_report",
-    (s, d) => reportSortAuto(oneTaskPlan(s, d, "documents"))(tF(s, d, "documents")
+    (s, d) => reportSortAuto(ScalePolicy.oneTask(s, d, "documents"))(tF(s, d, "documents")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(md5(col("text"))).as("n_uniq_texts"),
@@ -2152,7 +2087,7 @@ object Catalog {
         .agg(count(lit(1)).as("votes"))
       val winner = Relational.topKPerGroup(votes, Seq("qid"),
         Seq(col("votes").desc, col("label")), 1)
-      reportSortAuto(oneTaskPlan(s, d, "embeddings"))(winner.select(col("qid"),
+      reportSortAuto(ScalePolicy.oneTask(s, d, "embeddings"))(winner.select(col("qid"),
         col("label").cast("bigint").as("pred_label"), col("votes")),
         col("qid"))
     },
@@ -2195,7 +2130,7 @@ object Catalog {
       val spread = {
         val ev = t(s, d, "events")
           .select(col("user_id"), to_date(col("ts")).as("d"))
-        if (oneTaskPlan(s, d, "events")) ev.coalesce(1)
+        if (ScalePolicy.oneTask(s, d, "events")) ev.coalesce(1)
         else ev.repartitionByRange(s.sparkContext.defaultParallelism,
           col("user_id"))
       }
@@ -2266,7 +2201,7 @@ object Catalog {
   val x74 = Q("x74_debounce",
     (s, d) => { val ev = t(s, d, "events")
         .withColumn("w", expr("unix_micros(ts) div 600000000"))
-      if (oneTaskPlan(s, d, "events")) ev.coalesce(1)
+      if (ScalePolicy.oneTask(s, d, "events")) ev.coalesce(1)
       else ev.repartitionByRange(s.sparkContext.defaultParallelism,
         col("user_id"), col("event_type"), col("w")) }
       .groupBy("user_id", "event_type", "w")
@@ -2289,7 +2224,7 @@ object Catalog {
   val x75 = Q("x75_share_of_total",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      reportSortAuto(oneTaskPlan(s, d, "events"))(tF(s, d, "events")
+      reportSortAuto(ScalePolicy.oneTask(s, d, "events"))(tF(s, d, "events")
         .groupBy(to_date(col("ts")).as("d"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .withColumn("share", round(col("n") /
@@ -2353,7 +2288,7 @@ object Catalog {
     * broadcast-join shape intact. Exact kept here for the hash oracle. */
   val x77 = Q("x77_mad",
     (s, d) => {
-      val fused = oneTaskPlan(s, d, "events")
+      val fused = ScalePolicy.oneTask(s, d, "events")
       val e = tF(s, d, "events")
       // r14 two-agg shape kept (r15 A/B): a helper-based med + dev + mad
       // three-join variant measured worse (0.41 vs 0.31 s) AND re-shuffled
@@ -2723,7 +2658,7 @@ object Catalog {
     // zero joins, one kernel pass — see TextAnalysis.mixtureSampleFused
     (s, d) => reportSortFused(
       TextAnalysis.mixtureSample(t(s, d, "documents"), budgetPermille = 250,
-        fuseOneTask = oneTaskPlan(s, d, "documents")),
+        fuseOneTask = ScalePolicy.oneTask(s, d, "documents")),
       col("source")),
     Some(s"""WITH t AS (SELECT doc_id, source,
             |    CAST(length(${Portable.tokens(DuckD, "text")}) AS BIGINT)
@@ -2963,7 +2898,7 @@ object Catalog {
     // the gate the pass already spreads (kernelDocsAuto), so there is no
     // at-scale upside to buy.
     (s, d) => TextAnalysis.pmiCollocations(kernelDocsAuto(s, d),
-      fuseOneTask = docsUnderSpread(s, d)),
+      fuseOneTask = ScalePolicy.kernelUnderSpread(s, d)),
     Some(s"""WITH t AS (SELECT ${Portable.tokens(DuckD, "text")} AS toks
             |    FROM documents),
             |u AS (SELECT unnest(toks) AS w FROM t),
@@ -3083,7 +3018,7 @@ object Catalog {
     (s, d) => reportSortFused(
       Similarity.labelCentroidOutliers({
         val emb = t(s, d, "embeddings")
-        if (oneTaskPlan(s, d, "embeddings")) emb.coalesce(1)
+        if (ScalePolicy.oneTask(s, d, "embeddings")) emb.coalesce(1)
         else emb.repartition(s.sparkContext.defaultParallelism, col("vec_id"))
       }),
       col("label")),
@@ -3207,14 +3142,14 @@ object Catalog {
     * report is O(|sources|²). */
   val x97 = Q("x97_source_overlap",
     (s, d) => {
-      // spread gated on scan bytes (r15, the kernelDocsAuto rule): below
-      // SpreadBytes the 32-way kernel exchange on a 1-split scan was pure
-      // floor; above it the winnow kernel earns the spread
+      // the kernelDocsAuto decision (r15): under the spread gate the 32-way
+      // kernel exchange on a 1-split scan was pure floor; above it the
+      // winnow kernel earns the spread
       val raw = t(s, d, "documents").select("doc_id", "source", "text")
       val spread =
-        if (raw.queryExecution.optimizedPlan.stats.sizeInBytes >= SpreadBytes)
-          raw.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        else raw.coalesce(1) // SinglePartition → the self-join fuses
+        // SinglePartition below the gate → the self-join fuses
+        if (ScalePolicy.kernelUnderSpread(s, d)) raw.coalesce(1)
+        else raw.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       val fps = spread
         .select(col("source"), explode(graft.functions.TextHashFunctions
           .winnowSet(col("text"), 4, 5)).as("fp"))
@@ -3264,7 +3199,7 @@ object Catalog {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy("d")
-      val fusedX98 = oneTaskPlan(s, d, "events")
+      val fusedX98 = ScalePolicy.oneTask(s, d, "events")
       val seg = t(s, d, "events")
         // range BEFORE the to_date + DECIMAL-round projection (x64/x72's
         // rule, applied here in round 9): the range sampler re-executes
@@ -3535,7 +3470,7 @@ object Catalog {
       // partition below it
       val base0 = t(s, d, "documents").select("doc_id", "source", "text")
       val spread =
-        if (docsUnderSpread(s, d)) base0.coalesce(1)
+        if (ScalePolicy.kernelUnderSpread(s, d)) base0.coalesce(1)
         else base0.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       val q = spread
         // raw-text token-bearing filter (r16): the post-kernel
@@ -3613,17 +3548,17 @@ object Catalog {
       // + one main job instead of 4 jobs / 132 tasks)
       val est = (t(s, d, "documents")
         .queryExecution.optimizedPlan.stats.sizeInBytes / 2).toLong
-      // Gate probed at sf1 and KEPT on oneTaskPlan (r17 session 2): the
+      // Gate probed at sf1 and KEPT on one-task fusion (r17 session 2): the
       // sf1 pair showed fused x102 at 1.00x of duck while the twin x66
       // ran its at-scale shape at 0.58x, suggesting the kernel-spread
-      // gate (docsUnderSpread) should decide here too — MEASURED, and the
+      // gate should decide here too — MEASURED, and the
       // at-scale branch LOSES at sf1 (same-window JobProfile pair: fused
       // 2.02 vs checkpoint+bloom 2.97): the bloom build is an extra
       // serialized eval pass + driver collect that only pays once the
       // distinct exchange it prefilters carries real volume (sf5+, where
       // the byte cap unfuses anyway: 3.39 -> 2.30 there). The r15
       // calibration stands.
-      val fused = oneTaskPlan(s, d, "documents")
+      val fused = ScalePolicy.oneTask(s, d, "documents")
       if (fused) {
         // fused branch unchanged: SinglePartition scans, SHJ hint, one job
         val docs = tF(s, d, "documents").withColumn("h",
@@ -3721,12 +3656,13 @@ object Catalog {
     * whose joins are explicit `broadcast()` hints (the strategy is already
     * decided) or whose skew exposure is designed out (x20's prefix
     * df-ordering bounds posting lists by construction). Membership is
-    * MEASURED, not guessed — tools/AqeProbe (interleaved A/B, flips the
-    * conf between build and action) times every query both ways at sf0.1;
+    * MEASURED, not guessed — `tools.AbProbe spark.sql.adaptive.enabled
+    * true false` (interleaved A/B, sets the conf before build AND before the
+    * action) times every query both ways at sf0.1;
     * only stable wins ≥ ~0.02 s land here, and queries where adaptive wins
     * (q05/q13/x28/x30/x35/x39/x41/x50: partition coalescing on agg-heavy
     * middle stages, runtime broadcast conversions) stay adaptive. Re-run
-    * AqeProbe after plan reshapes. */
+    * the probe after plan reshapes. */
   private val staticPlanned: Set[String] = Set(
     "q01_project_rename", "q02_cast_date", "q06_json_extract",
     "q11_latest_per_user", "q14_cosine_topk",
@@ -3805,7 +3741,7 @@ object Catalog {
     // x48: re-probed after the NearestCentroids kernel route replaced the
     // crossJoin+window assignment — the remaining plan is an explicitly
     // broadcast probe join + bounded ranking tail, nothing for AQE to
-    // re-decide (0.223 static vs 0.269 adaptive, AqeProbe)
+    // re-decide (0.223 static vs 0.269 adaptive, AbProbe)
     "x48_ann_ivf")
 
   /** An explicit SPARK_GRAFT_CONF override of the AQE flag disables the

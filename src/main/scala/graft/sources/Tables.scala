@@ -54,59 +54,6 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
 
-  /** Exact row count from the parquet FOOTER — a zero-job, driver-side
-    * statistic (same cost class as the relation cache's listing + schema
-    * read), cached per (dir, table) since testdata files are immutable
-    * within a session. Exists because `optimizedPlan.stats.sizeInBytes`
-    * is COMPRESSED file bytes: the 2026-08-13 corpus regeneration
-    * compressed events-sf1 (1M rows) under the 16 MB one-task cap that
-    * was calibrated as "sf1 can never fuse", and a swath of event queries
-    * silently ran 1M-row single-task plans at sf1 (r16 pair-O find). Row
-    * count is compression-invariant; byte caps alone are not. */
-  private val rowCountCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), Long]
-
-  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
-    require(all.contains(name), s"unknown table: $name")
-    // Session-scoped like relationCache (ADVICE r16): a JVM that regenerates
-    // testdata at the same path gets fresh counts with its fresh session, and
-    // stopped sessions' entries are evicted on the miss path.
-    rowCountCache.getOrElseUpdate((spark, sfDir, name), {
-      rowCountCache.keySet.filter(_._1.sparkContext.isStopped)
-        .foreach(rowCountCache.remove)
-      val conf = spark.sessionState.newHadoopConf()
-      val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
-      val fs = path.getFileSystem(conf)
-      // RECURSIVE listing (ADVICE r16 medium): a nested or Hive-partitioned
-      // layout that spark.read.parquet reads fine would list 0 top-level
-      // *.parquet files and silently report 0 rows — defeating the row cap
-      // for exactly the corpus-regeneration scenario it hardens. Walk the
-      // tree, skip hidden/metadata files the parquet source also skips, and
-      // fail LOUDLY if no data file is found.
-      val files: Seq[org.apache.hadoop.fs.FileStatus] =
-        if (fs.getFileStatus(path).isDirectory) {
-          val it = fs.listFiles(path, true)
-          val buf = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
-          while (it.hasNext) {
-            val st = it.next()
-            val n = st.getPath.getName
-            if (st.isFile && n.endsWith(".parquet") &&
-                !n.startsWith("_") && !n.startsWith(".")) buf += st
-          }
-          buf.toSeq
-        } else Seq(fs.getFileStatus(path))
-      require(files.nonEmpty,
-        s"rowCount($sfDir/$name.parquet): no parquet data files found — " +
-          "unexpected layout; refusing to report 0 rows")
-      files.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try reader.getRecordCount finally reader.close()
-      }.sum
-    })
-  }
-
   /** Register every corpus table as a temp view so the whole surface is
     * reachable from pure `spark.sql(...)`. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

@@ -41,11 +41,6 @@ class DriverBoundSpec extends AnyFunSuite {
         "MaxHotBuckets + 1 slim (band, key) rows"),
     "HiveCatalogDemo.scala" -> (2,
       "two-JVM demo main: bounded daily-count reports"),
-    "X34Probe.scala" -> (1,
-      "scratch profiler: ONE (rows, pairs, dots, hits, secs) counter row " +
-        "per partition — bounded by partition count"),
-    "X102Probe.scala" -> (1,
-      "route-stats aggregate .head() — ONE (count, sum) row per probe run"),
     "CurationBench.scala" -> (2,
       "max(doc_id) .head() — one row; thresholds collect — ONE " +
         "(source, cutoff) row per source (discreteThreshold is " +
